@@ -31,7 +31,9 @@ object TextFunctions {
     * the split — identical output to per-token stripping (removed
     * chars are never spaces) but one codegen'd regexp pass instead of
     * an interpreted per-token lambda (Spark higher-order functions
-    * are CodegenFallback).
+    * are CodegenFallback). Its only JVM twin is
+    * [[graft.functions.expressions.Tok]], which every driver-side
+    * query normalization goes through.
     */
   def tokens(text: Column): Column =
     filter(split(regexp_replace(lower(text), "[^a-z0-9 ]", ""), " "),

@@ -47,12 +47,21 @@ case class SharedDefs(pred: Expression, commons: Seq[Expression])
 }
 
 /** Pass-through marker that reports `deterministic = false` while
-  * evaluating exactly its child: an optimizer barrier. Catalyst never
-  * pushes predicates through (or collapses away) a projection with a
-  * non-deterministic field, so a common expression wrapped in NoInline
-  * stays factored in its own Project — computed once per row — instead
-  * of being substituted into every consumer. Codegen delegates to the
-  * child, so the barrier costs nothing at runtime.
+  * evaluating exactly its child: graft's one optimizer barrier.
+  * Catalyst never pushes predicates through (or collapses away) a
+  * projection with a non-deterministic field, and never lifts a
+  * non-deterministic conjunct into join keys. Its three uses:
+  *  - [[SharedDefs]]: a common expression stays factored in its own
+  *    Project — computed once per row — instead of being substituted
+  *    into every predicate arm;
+  *  - `TextAnalysis.langMismatch`: the LangScores kernel stays in the
+  *    scoring Project instead of being re-inlined into the mismatch
+  *    Filter (scored twice per row);
+  *  - `Analytics.q21`: the own-supplier equality stays a residual
+  *    filter above the `l_orderkey` join instead of becoming a second
+  *    join key (a compound-key re-exchange of the line stream).
+  * Codegen delegates to the child, so the barrier costs nothing at
+  * runtime. [[SharedExpr.noInline]] is the Column form.
   */
 case class NoInline(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -84,6 +93,9 @@ case class SharedRef(index: Int, declaredType: DataType)
 }
 
 object SharedExpr {
+  /** `c` behind the [[NoInline]] optimizer barrier. */
+  def noInline(c: Column): Column = ColumnBridge.column(NoInline(ColumnBridge.expression(c)))
+
   /** Build `f` over refs to `commons` (each paired with the type its
     * consumers see pre-analysis): every common evaluates once per row
     * regardless of how many arms reference it.

@@ -39,11 +39,15 @@ case class GramFingerprint(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Shared JVM twin of the relational tokenizer
-  * (TextFunctions.tokens): lowercase, strip non-[a-z0-9 ], split on
-  * single spaces, drop len<=1 and stopwords. Byte-identical output to
-  * the Column formulation (verified in TextAnalysisSpec /
-  * DedupSpec) so native and relational pipelines interoperate.
+/** The JVM text normalizer: the twin of the relational tokenizer
+  * (TextFunctions.tokens) — lowercase, strip non-[a-z0-9 ], split on
+  * single spaces, drop len<=1 and stopwords — plus the query-side
+  * forms every operator and server uses ([[terms]], [[words]],
+  * [[lower]]). Byte-identical output to the Column formulation
+  * (verified in TextAnalysisSpec / DedupSpec) so native and
+  * relational pipelines interoperate. Case mapping is
+  * `Locale.ROOT`, like Spark's `lower`: a driver running in a
+  * Turkish locale must not turn a query's "INDEX" into "ındex".
   */
 private[graft] object Tok {
   val StopSet: java.util.HashSet[String] = {
@@ -79,12 +83,21 @@ private[graft] object Tok {
     */
   def tokens(text: String): java.util.ArrayList[String] = {
     val sb = new java.lang.StringBuilder(text.length)
+    var src = text
+    var folded = false
     var i = 0
-    while (i < text.length) {
-      val c0 = text.charAt(i)
-      val c = if (c0 >= 'A' && c0 <= 'Z') (c0 + 32).toChar else c0
-      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == ' ') sb.append(c)
-      i += 1
+    while (i < src.length) {
+      val c0 = src.charAt(i)
+      if (c0 >= 0x80 && !folded) {
+        // ASCII fast path over: restart on the full case mapping,
+        // which (like Spark's `lower`) maps U+0130 and U+212A into
+        // [a-z] — the per-char ASCII fold would drop them
+        src = lower(text); folded = true; sb.setLength(0); i = 0
+      } else {
+        val c = if (c0 >= 'A' && c0 <= 'Z') (c0 + 32).toChar else c0
+        if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == ' ') sb.append(c)
+        i += 1
+      }
     }
     val out = new java.util.ArrayList[String]()
     var start = 0
@@ -103,6 +116,26 @@ private[graft] object Tok {
     }
     out
   }
+
+  /** A query's distinct search terms: [[tokens]], first occurrence
+    * kept.
+    */
+  def terms(q: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    tokens(q).asScala.toSeq.distinct
+  }
+
+  /** Locale-independent lowercase — the case mapping of Spark's
+    * `lower`, whatever the driver's default locale.
+    */
+  def lower(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
+
+  /** The raw lowercased words of a query: [[lower]], split on single
+    * spaces, empty strings dropped (order and duplicates kept). No
+    * stripping — the substring and phrase matchers compare against
+    * raw lowercased text.
+    */
+  def words(s: String): Seq[String] = lower(s).split(" ").toSeq.filter(_.nonEmpty)
 }
 
 /** Per-document 60-bit weighted SimHash computed in one pass

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{OracleNum, Tables}
 import graft.functions.TextFunctions._
+import graft.functions.expressions.Tok
 import graft.plans.ScoreTag
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,13 +33,6 @@ object Bm25 {
   val K1 = 1.2
   val B  = 0.75
 
-  /** Scala-side mirror of TextFunctions.tokens for query strings. */
-  def tokenizeQuery(q: String): Seq[String] =
-    q.toLowerCase.split(" ").toSeq
-      .map(_.replaceAll("[^a-z0-9]", ""))
-      .filter(t => t.length > 1 && !StopWords.contains(t))
-      .distinct
-
   val DefaultQuery = "spark vector join stream window"
 
   def search(spark: SparkSession, dir: String,
@@ -65,7 +59,7 @@ object Bm25 {
                  query: String = DefaultQuery, k: Int = 20,
                  k1: Double = K1, b: Double = B): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    val terms = tokenizeQuery(query)
+    val terms = Tok.terms(query)
     // a stopword-only / too-short query has no searchable terms: the
     // sparse branch degrades to empty (the pre-sketch formulation's
     // isin() over zero terms did the same) instead of building an
@@ -109,7 +103,7 @@ object Bm25 {
     * oracle twin of [[searchDocs]]'s corpus-frame parameter.
     */
   def searchSqlOver(corpus: String, query: String = DefaultQuery, k: Int = 20): String = {
-    val terms = tokenizeQuery(query).map(t => s"'$t'").mkString("(", ", ", ")")
+    val terms = Tok.terms(query).map(t => s"'$t'").mkString("(", ", ", ")")
     s"""WITH toks AS (
        |  SELECT doc_id, ${tokensSql("text")} AS toks FROM $corpus
        |), lens AS (
@@ -309,7 +303,7 @@ object Bm25 {
     */
   def searchFromTable(spark: SparkSession, tableName: String,
                       query: String = DefaultQuery, k: Int = 20): DataFrame = {
-    val terms = tokenizeQuery(query)
+    val terms = Tok.terms(query)
     val posting = livePostings(spark, tableName)
     val lens = posting.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
     val stats = lens.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
@@ -346,7 +340,7 @@ object Bm25 {
     */
   def textSearchDocs(docs: DataFrame,
                      query: String = DefaultQuery, k: Int = 20): DataFrame = {
-    val terms = query.toLowerCase.split(" ").toSeq.filter(_.nonEmpty).distinct
+    val terms = Tok.words(query).distinct
     val content = lower(col("text"))
     val score = terms.map(t => when(content.contains(t), 1L).otherwise(0L))
       .reduce(_ + _)
@@ -432,7 +426,7 @@ object Bm25 {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-    val orig = tokenizeQuery(query)
+    val orig = Tok.terms(query)
     if (orig.isEmpty)
       return docs.select(col("doc_id"), lit(0L).as("score", ScoreTag.metadata)).filter(lit(false))
     // THE corpus pass: per-doc (dl, [(term, tf)]) — every stage below
@@ -509,7 +503,7 @@ object Bm25 {
   }
 
   def prfSearchSql(query: String = DefaultQuery, k: Int = 20): String = {
-    val orig = tokenizeQuery(query)
+    val orig = Tok.terms(query)
     val inOrig = orig.map(t => s"'$t'").mkString("(", ", ", ")")
     val origRows = orig.map(t => s"('$t', $PrfOrigWeight)").mkString(", ")
     val score1 = fxSql(
@@ -692,8 +686,7 @@ object Bm25 {
     // would silently drop weight on the Spark side while the SQL
     // twin's join fans out and sums)
     val qIds: Map[Long, Long] = query
-      .groupMapReduce { case (t, _) =>
-        graft.functions.expressions.Tok.hash60(t) }(_._2)(_ + _)
+      .groupMapReduce { case (t, _) => Tok.hash60(t) }(_._2)(_ + _)
     val tfs = column(graft.functions.expressions.TermFreqs(expression(col("text"))))
     val rows = Tables.spread(spark,
         Tables.documents(spark, dir).select(col("doc_id"), col("text")))
@@ -829,7 +822,7 @@ object Bm25 {
 
   def textSearchSqlOver(corpus: String, query: String = DefaultQuery,
                         k: Int = 20): String = {
-    val terms = query.toLowerCase.split(" ").toSeq.filter(_.nonEmpty).distinct
+    val terms = Tok.words(query).distinct
     val score = terms
       .map(t => s"(CASE WHEN contains(lower(text), '$t') THEN 1 ELSE 0 END)")
       .mkString(" + ")
@@ -886,7 +879,7 @@ object Bm25 {
                                          k: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     import graft.functions.expressions.TopKAgg.topK
-    val qTerms = queries.map(tokenizeQuery)
+    val qTerms = queries.map(Tok.terms)
     val terms = qTerms.flatten.distinct
     require(terms.nonEmpty, "batch has no searchable terms")
     val counts = toksRel.select(col("doc_id"),
@@ -924,7 +917,7 @@ object Bm25 {
   }
 
   def searchBatchSql(queries: Seq[String] = BatchQueries, k: Int = 10): String = {
-    val qTerms = queries.map(tokenizeQuery)
+    val qTerms = queries.map(Tok.terms)
     val union = qTerms.flatten.distinct.map(t => s"'$t'").mkString("(", ", ", ")")
     val qtermRows = qTerms.zipWithIndex.flatMap { case (ts, qi) =>
       ts.map(t => s"($qi, '$t')")
@@ -977,7 +970,7 @@ object Bm25 {
   def phraseSearch(spark: SparkSession, dir: String,
                    phrase: String = DefaultPhrase, k: Int = 20): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    val words = phrase.toLowerCase.split(" ").toSeq.filter(_.nonEmpty)
+    val words = Tok.words(phrase)
     require(words.size >= 2, "phrase needs at least two tokens")
     // one fused codegen'd scan per document
     // ([[graft.functions.expressions.PhraseHits]] — [count, first_pos])
@@ -1017,7 +1010,7 @@ object Bm25 {
   }
 
   def phraseSearchSql(phrase: String = DefaultPhrase, k: Int = 20): String = {
-    val words = phrase.toLowerCase.split(" ").toSeq.filter(_.nonEmpty)
+    val words = Tok.words(phrase)
     // SQL-escape each token: a phrase like "don't panic" must render a
     // valid (and non-injectable) literal, same as the DataFrame twin
     val cond = words.zipWithIndex

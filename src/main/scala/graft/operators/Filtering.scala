@@ -133,7 +133,7 @@ object Filtering {
     case ArrayHas(field, v) => array_contains(bind(field), lit(v))
     case TextContains(field, needle, cs) =>
       if (cs) bind(field).contains(needle)
-      else lower(bind(field)).contains(needle.toLowerCase)
+      else lower(bind(field)).contains(graft.functions.expressions.Tok.lower(needle))
     case FuzzyContains(field, needle, d) =>
       exists(graft.functions.TextFunctions.tokens(bind(field)),
         t => levenshtein(t, lit(needle)) <= d)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.OracleNum
+import graft.functions.expressions.Tok
 import graft.plans.ScoreTag
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -233,7 +234,7 @@ object HybridSearch {
     // Bm25.searchBatch's sparse branch (an empty terms list would
     // otherwise crash the score reduce at plan-construction time)
     val perQ = queries.zipWithIndex.flatMap { case (q, qi) =>
-      val terms = q.toLowerCase.split(" ").toSeq.filter(_.nonEmpty).distinct
+      val terms = Tok.words(q).distinct
       if (terms.isEmpty) None
       else {
         val score = terms.map(t => when(content.contains(t), 1L).otherwise(0L))
@@ -273,8 +274,7 @@ object HybridSearch {
   def rrfBatchSql(queries: Seq[String] = Bm25.BatchQueries, limit: Int = 20): String = {
     val n = limit * 2
     val qtextRows = queries.zipWithIndex.flatMap { case (q, qi) =>
-      q.toLowerCase.split(" ").toSeq.filter(_.nonEmpty).distinct
-        .map(t => s"($qi, '$t')")
+      Tok.words(q).distinct.map(t => s"($qi, '$t')")
     }.mkString(", ")
     s"""WITH dense AS (
        |  SELECT query_id, vec_id AS doc_id, rank
@@ -720,7 +720,7 @@ object HybridSearch {
 
   def searchSnippets(spark: SparkSession, dir: String, qid: Long = 0,
                      query: String = SnippetQuery, limit: Int = 10): DataFrame = {
-    val q = query.toLowerCase
+    val q = Tok.lower(query)
     val qlen = q.length
     val hits = rrf(spark, dir, qid, query, limit)
     val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
@@ -738,7 +738,7 @@ object HybridSearch {
   }
 
   def searchSnippetsSql(qid: Long = 0, query: String = SnippetQuery, limit: Int = 10): String = {
-    val q = query.toLowerCase
+    val q = Tok.lower(query)
     val qlen = q.length
     s"""WITH hits AS (
        |  ${rrfSql(qid, query, limit)}

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{OpCache, OracleNum, Tables}
 import graft.functions.TextFunctions._
+import graft.functions.expressions.SharedExpr.noInline
 import graft.plans.ScoreTag
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -110,19 +111,15 @@ object TextAnalysis {
     val (pred, conf) = langPredictionFrom(col("ls"))
     Tables.spread(spark,
         Tables.documents(spark, dir).select(col("doc_id"), col("text"), col("lang")))
-      // explode(array(·)) is a ONE-ROW Generate barrier (r11, guide
-      // §4): PushDownPredicate otherwise pushes the mismatch filter
-      // below the scoring projection and re-inlines the LangScores
-      // kernel into the Filter condition — the scorer ran twice per
-      // row, with the first evaluation serialized onto the single
-      // local parquet split (measured: 2.7 s vs 1.6 s warm at sf1).
-      // A filter cannot cross a Generate whose output it references,
-      // so the kernel stays evaluated once. explode of a 1-element
-      // array (even a null element) emits exactly one row — rows
-      // identical by construction; TextAnalysisSpec pins
-      // mismatch ⊆ langId parity.
+      // NoInline barrier: PushDownPredicate would otherwise push the
+      // mismatch filter below the scoring projection and re-inline
+      // the LangScores kernel into the Filter condition — the scorer
+      // ran twice per row, with the first evaluation serialized onto
+      // the single local parquet split (measured: 2.7 s vs 1.6 s warm
+      // at sf1). A filter never crosses a projection with a
+      // non-deterministic field, so the kernel stays evaluated once.
       .select(col("doc_id"), col("lang").as("declared_lang"),
-        explode(array(langScores)).as("ls"))
+        noInline(langScores).as("ls"))
       .select(col("doc_id"), col("declared_lang"),
         pred.as("pred_lang"), conf.as("confidence"))
       .filter(col("pred_lang") =!= "und" && col("pred_lang") =!= col("declared_lang"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.functions.expressions.Tok
 import graft.operators.VectorSearch
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -651,7 +652,7 @@ object PointServe {
       // not corpus-sized). None on the unsharded server.
       globalStats: Option[(Int, Double, java.util.HashMap[String, Int])] = None) {
 
-    import graft.operators.Bm25.{B, K1, tokenizeQuery}
+    import graft.operators.Bm25.{B, K1}
 
     private val nDocs = docIds.length
     private val statN = globalStats.fold(nDocs)(_._1)
@@ -844,7 +845,7 @@ object PointServe {
     }
 
     def bm25(query: String, k: Int = 20): Seq[Hit] = {
-      val terms = tokenizeQuery(query).toArray
+      val terms = Tok.terms(query).toArray
       if (terms.isEmpty) return Seq.empty
       val postings = terms.map(t => inverted.getOrDefault(t, Array.empty))
       val sc = scratch.get()
@@ -895,7 +896,7 @@ object PointServe {
       * the raw-word vocabulary instead of a full corpus scan.
       */
     def textSearch(query: String, k: Int = 20): Seq[Hit] = {
-      val terms = query.toLowerCase.split(" ").toSeq.filter(_.nonEmpty).distinct
+      val terms = Tok.words(query).distinct
       if (terms.isEmpty) return Seq.empty
       val sc = scratch.get()
       sc.begin()
@@ -1083,7 +1084,7 @@ object PointServe {
       * keeps trailing empties).
       */
     def phrase(query: String, k: Int = 20): Seq[(Long, Long, Long)] = {
-      val words = query.toLowerCase.split(" ").filter(_.nonEmpty)
+      val words = Tok.words(query).toArray
       require(words.length >= 2, "phrase needs at least two tokens")
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       var i = 0
@@ -1604,7 +1605,6 @@ object PointServe {
   final class Dsir private[PointServe] (
       private val raw: Array[Long], private val tgt: Array[Long],
       private var totr: Long, private var tott: Long) {
-    import graft.functions.expressions.Tok
     import graft.operators.Curation.DsirBuckets
 
     @volatile private var table: Array[Long] = rebuild()
@@ -1739,7 +1739,6 @@ object PointServe {
       private val merges: Array[(String, String)],
       private val pid: java.util.HashMap[String, Long],
       memoMax: Int = BpeMemoMaxWords) {
-    import graft.functions.expressions.Tok
 
     private val memo = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
 
@@ -1773,8 +1772,7 @@ object PointServe {
         val ids = new Array[Long](syms.size())
         var k = 0
         while (k < ids.length) {
-          val got = pid.get(syms.get(k))
-          ids(k) = if (got == null) -1L else got.longValue()
+          ids(k) = pid.getOrDefault(syms.get(k), -1L)
           k += 1
         }
         if (memo.size() < memoMax) memo.put(word, ids)

@@ -131,57 +131,3 @@ final class ReplicaRouter[A](replicas: IndexedSeq[A],
       i -> ReplicaStats(routed(i), inFlight(i), healthy(i), emaMs(i))).toMap
   }
 }
-
-/** Consistent-hash shard ring (reference src/distributed/shard.rs:185
-  * ConsistentHashRing): key → owning node via md5-derived VIRTUAL
-  * nodes, `weight` scaling a node's vnode count. The property that
-  * matters — and that the spec pins — is MINIMAL REMAPPING: removing
-  * a node moves only the keys that node owned; every other key keeps
-  * its assignment (a plain `hash(key) % n` remaps nearly everything
-  * on membership change). Batch-tier sharding is Spark's hash
-  * partitioning and is deliberately NOT re-wrapped; this ring routes
-  * point queries across [[PointServe]] nodes, where membership
-  * changes (scale-out, failure) are runtime events.
-  */
-final class ShardRing(virtualNodesPerWeight: Int = 150) {
-  require(virtualNodesPerWeight > 0, "virtualNodesPerWeight must be > 0")
-  private val ring = new java.util.TreeMap[Long, String]()
-  private val weights = scala.collection.mutable.Map.empty[String, Int]
-
-  private def vhash(s: String): Long =
-    graft.functions.expressions.Tok.hash60(s)
-
-  /** Add (or re-weight) a node: `weight × virtualNodesPerWeight`
-    * deterministic vnode positions (shard.rs:198 add_node).
-    */
-  def addNode(nodeId: String, weight: Int = 1): Unit = synchronized {
-    require(weight > 0, s"weight must be > 0 (got $weight)")
-    removeNode(nodeId)
-    weights(nodeId) = weight
-    (0 until weight * virtualNodesPerWeight)
-      .foreach(i => ring.put(vhash(s"$nodeId#$i"), nodeId))
-  }
-
-  /** Remove a node and all its vnodes (shard.rs:223 remove_node). */
-  def removeNode(nodeId: String): Unit = synchronized {
-    weights.remove(nodeId).foreach { w =>
-      (0 until w * virtualNodesPerWeight)
-        .foreach(i => ring.remove(vhash(s"$nodeId#$i")))
-    }
-  }
-
-  /** Owning node for a key: first vnode clockwise of the key's hash,
-    * wrapping at the ring's end (shard.rs:243 get_node). None on an
-    * empty ring.
-    */
-  def nodeFor(key: String): Option[String] = synchronized {
-    if (ring.isEmpty) None
-    else Option(ring.ceilingEntry(vhash(key)))
-      .orElse(Option(ring.firstEntry())).map(_.getValue)
-  }
-
-  /** (node → vnode count) — the balance view (shard.rs:315 get_stats). */
-  def stats: Map[String, Int] = synchronized {
-    weights.map { case (n, w) => n -> w * virtualNodesPerWeight }.toMap
-  }
-}

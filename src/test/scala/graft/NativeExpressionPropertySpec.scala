@@ -40,6 +40,25 @@ class NativeExpressionPropertySpec extends GraftSuite {
     assert(viaColumn.toSeq == viaJvm)
   }
 
+  test("JVM tokenizer matches the Column tokenizer on non-ASCII case mapping") {
+    // U+0130 and U+212A (Kelvin) are the only code points whose
+    // lowercase lands in [a-z0-9]: Spark's `lower` maps them to i / k
+    import spark.implicits._
+    val texts = Seq(
+      "\u0130STANBUL \u0130ndex \u0130\u0130", "\u212AELVIN \u212Aey \u212A\u212A",
+      "caf\u00e9 r\u00e9sum\u00e9 \u00c9T\u00c9", "stra\u00dfe STRASSE \u00df\u00df \u1e9eX",
+      "D\u0130\u015e I\u0131 INDEX Item", "tab\tsep\tword new\nline\nword",
+      "mixed \u0130\tK\u212A\n\u00e9 \u00df I ok")
+    val viaColumn = texts.toDF("text")
+      .select(graft.functions.TextFunctions.tokens(col("text")).as("t"))
+      .collect().map(_.getSeq[String](0).toList)
+    val viaJvm = texts.map(s => {
+      val l = Tok.tokens(s); (0 until l.size).map(l.get).toList
+    })
+    assert(viaColumn.toSeq == viaJvm)
+    assert(viaJvm.head == List("istanbul", "index", "ii"))
+  }
+
   test("HyperplaneSig matches the relational per-plane HOF signature") {
     import graft.operators.VectorSearch
     val planes = VectorSearch.lshPlanes(64, 16)

@@ -259,10 +259,10 @@ class PlanHygieneSpec extends GraftSuite {
   test("q21 never re-exchanges the candidate line stream on the compound key (r10)") {
     // the r10 restructure attaches per-(order, supplier) stats to the
     // candidate lines through ONE l_orderkey-keyed join with the
-    // own-supplier equality as a residual predicate in a form
-    // Catalyst's equi-key extraction does not lift (l_suppkey -
-    // ps_suppkey = 0). If a refactor reverts to a plain equality, the
-    // planner pulls it into the join keys and the corpus-sized line
+    // own-supplier equality as a residual filter behind the NoInline
+    // barrier (Catalyst never lifts a non-deterministic conjunct into
+    // join keys). If a refactor drops the barrier, the planner pulls
+    // the plain equality into the join keys and the corpus-sized line
     // stream pays a full (l_orderkey, l_suppkey) exchange again —
     // exactly the shuffle this pin forbids.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec

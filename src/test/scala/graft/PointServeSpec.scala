@@ -609,4 +609,35 @@ class PointServeSpec extends GraftSuite {
     // without a memo hit
     words.foreach(w => assert(capped.count(w) == free.count(w), w))
   }
+
+  test("bpe encodes a piece outside the trained vocabulary as -1") {
+    val pid = new java.util.HashMap[String, Long]()
+    Seq("a" -> 0L, "b" -> 1L, "ab" -> 2L).foreach { case (p, i) => pid.put(p, i) }
+    val bpe = new PointServe.Bpe(Array(("a", "b")), pid)
+    assert(bpe.encode("abz ba").toSeq == Seq(2L, -1L, 1L, 0L))
+    assert(bpe.count("abz ba") == ((2L, 4L)))
+  }
+
+  test("query normalization ignores the driver's default locale") {
+    import graft.functions.expressions.Tok
+    val emb = PointServe.loadEmbedded(spark, sf)
+    val prior = java.util.Locale.getDefault
+    // a Turkish default lowercases "I" to a dotless "ı"
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      Seq("INDEX Item" -> "index item", "WINDOW Join" -> "window join").foreach {
+        case (up, low) =>
+          assert(Tok.terms(up) == Tok.terms(low), up)
+          assert(Tok.words(up) == Tok.words(low), up)
+          assert(Tok.lower(up) == low, up)
+          assert(emb.bm25(up, 10) == emb.bm25(low, 10), up)
+          assert(emb.textSearch(up, 10) == emb.textSearch(low, 10), up)
+          assert(emb.phrase(up, 10) == emb.phrase(low, 10), up)
+      }
+      // the corpus pair actually hits on every path
+      assert(emb.bm25("window join", 10).nonEmpty)
+      assert(emb.textSearch("window join", 10).nonEmpty)
+      assert(emb.phrase("window join", 10).nonEmpty)
+    } finally java.util.Locale.setDefault(prior)
+  }
 }

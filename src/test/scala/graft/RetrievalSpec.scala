@@ -1,12 +1,13 @@
 package graft
 
+import graft.functions.expressions.Tok
 import graft.operators.{Bm25, HybridSearch}
 
 class RetrievalSpec extends GraftSuite {
 
   test("query tokenizer mirrors the corpus tokenizer semantics") {
-    assert(Bm25.tokenizeQuery("The FAST, fast query!! a to") == Seq("fast", "query"))
-    assert(Bm25.tokenizeQuery("x y") == Seq())
+    assert(Tok.terms("The FAST, fast query!! a to") == Seq("fast", "query"))
+    assert(Tok.terms("x y") == Seq())
   }
 
   test("bm25 degrades to empty for a stopword-only query (no searchable terms)") {
@@ -266,9 +267,8 @@ class RetrievalSpec extends GraftSuite {
     val fbText = Tables.documents(spark, sf)
       .filter(col("doc_id").isin(fbIds.toSeq: _*))
       .collect().map(_.getAs[String]("text"))
-    val orig = Bm25.tokenizeQuery(Bm25.DefaultQuery).toSet
+    val orig = Tok.terms(Bm25.DefaultQuery).toSet
     // recompute the expansion mass driver-side
-    import graft.functions.expressions.Tok
     import scala.jdk.CollectionConverters._
     val mass = scala.collection.mutable.Map.empty[String, Long]
     fbText.foreach(t => Tok.tokens(t).asScala.foreach { w =>
@@ -290,7 +290,6 @@ class RetrievalSpec extends GraftSuite {
   }
 
   test("vocabulary dense ids are a gapless df-descending enumeration") {
-    import graft.functions.expressions.Tok
     import scala.jdk.CollectionConverters._
     // UNSORTED relation contract (r8): sort on the driver, not the plan
     val rows = Bm25.vocabulary(spark, sf).collect()

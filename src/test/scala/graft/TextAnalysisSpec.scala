@@ -13,7 +13,7 @@ class TextAnalysisSpec extends GraftSuite {
 
   test("lang family scores in ONE LangScores kernel pass (r11 plan pin)") {
     // the profile scorer is one codegen'd LangScores over the text;
-    // lang_mismatch's Generate barrier keeps PushDownPredicate from
+    // lang_mismatch's NoInline barrier keeps PushDownPredicate from
     // re-inlining the kernel into the Filter (it ran twice per row:
     // 2.7 s vs 1.6 s warm at sf1). One 'langscores' in each executed
     // plan = the kernel evaluates once per document.
