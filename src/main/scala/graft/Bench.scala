@@ -2,6 +2,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 object Bench {
+  /** InMemoryTableScans in `df`'s executed plan, subqueries included. */
+  private def inMemoryScans(df: org.apache.spark.sql.DataFrame): Int =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+      }.size
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -43,15 +50,23 @@ object Bench {
     // optional comma-separated subset for local iteration; absent = all
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(q => s(q._1)))
+    // cached-relation scans in each entry's executed plan, from the
+    // latest pass: the measured form of "served from cache"
+    val cacheScans = scala.collection.mutable.Map[String, Int]()
     def pass(): Map[String, Double] = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
       // noop write materializes every output column (count() would let
       // Catalyst prune expensive final projections and under-report)
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable =>
+      try {
+        val df = fn(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        val dt = (System.nanoTime() - t0) / 1e9
+        cacheScans(name) = inMemoryScans(df)
+        name -> dt
+      } catch { case e: Throwable =>
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+        name -> (System.nanoTime() - t0) / 1e9
       }
-      name -> (System.nanoTime() - t0) / 1e9
     }
     val passes = Seq(pass(), pass(), pass())
     def stat(f: Seq[Double] => Double): Map[String, Double] =
@@ -67,25 +82,23 @@ object Bench {
         case d: Double => r3(d).toString
         case x => x.toString
       }) }.mkString("{", ",", "}")
-    // Honest headline for driver-memo-served entries (r10 verdict):
-    // warm passes of the two BPE trainers are a ConcurrentHashMap hit
-    // plus a bounded toDF — not a Spark computation — so their
-    // min-of-3 measured the memo, not the training. Their headline
-    // time is the COLD pass: the only pass that computes from the
-    // parquet input, i.e. the number a fresh JVM reproduces. The warm
-    // minima stay in BENCH_DETAIL (memo_warm_min) so nothing is
-    // hidden. Entries that share operator-internal persist()ed
-    // relations still run real Spark jobs warm (cached-relation
-    // scans — the documented warm regime every pass-2/3 number is),
-    // and are flagged in BENCH_DETAIL as served_from_cache instead,
-    // measured from this very run: cold >= 2x the warm min and at
-    // least 0.25 s apart.
-    val memoColdHeadline = Set("bpe_train", "bpe_train_batched")
+    // Honest headline for the driver-memo-served entry (r10 verdict):
+    // warm passes of bpe_train are an OpCache memo hit plus a bounded
+    // toDF — not a Spark computation — so its min-of-3 measured the
+    // memo, not the training. Its headline time is the COLD pass: the
+    // only pass that computes from the parquet input, i.e. the number
+    // a fresh JVM reproduces. The warm minimum stays in BENCH_DETAIL
+    // (memo_warm_min) so nothing is hidden. Entries whose executed
+    // plan reads operator-internal cached relations still run real
+    // Spark jobs warm (cached-relation scans — the documented warm
+    // regime every pass-2/3 number is), and are listed in
+    // BENCH_DETAIL as served_from_cache: an InMemoryTableScan in the
+    // executed plan of this very run.
+    val memoColdHeadline = Set("bpe_train")
     val headline = mins.map { case (k, v) =>
       k -> (if (memoColdHeadline(k) && colds(k) >= 0) colds(k) else v) }
-    val servedFromCache = mins.keys.filter { k =>
-      val c = colds(k); val m = mins(k)
-      m >= 0 && c >= 2 * m && (c - m) >= 0.25 && !memoColdHeadline(k)
+    val servedFromCache = cacheScans.collect {
+      case (k, n) if n > 0 && !errors.contains(k) && !memoColdHeadline(k) => k
     }.toSeq.sorted
     val total = headline.values.filter(_ >= 0).sum
     // The stdout JSON must stay ONE SHORT line: the driver parses it from
@@ -120,7 +133,7 @@ object Bench {
     val sfcJson = servedFromCache.map("\"" + _ + "\"").mkString("[", ",", "]")
     val memoWarm = obj(memoColdHeadline.filter(mins.contains)
       .map(k => k -> mins(k)).toMap)
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","method":"min-of-3 (warm); memo-served bpe trainers report the cold pass (see memo_warm_min); best-2-of-3 mean in queries_mean (steal-robust); raw pass 1 in queries_cold","queries":${obj(headline)},"queries_mean":${obj(means)},"queries_cold":${obj(colds)},"memo_warm_min":$memoWarm,"served_from_cache":$sfcJson,"bucketed_ratio":${obj(twinRatios)},"errors":${obj(errors.toMap)},"serving":$serving,"serving_sf1":$servingSf1,"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","method":"min-of-3 (warm); memo-served bpe_train reports the cold pass (see memo_warm_min); served_from_cache lists entries with an InMemoryTableScan in the executed plan; best-2-of-3 mean in queries_mean (steal-robust); raw pass 1 in queries_cold","queries":${obj(headline)},"queries_mean":${obj(means)},"queries_cold":${obj(colds)},"memo_warm_min":$memoWarm,"served_from_cache":$sfcJson,"bucketed_ratio":${obj(twinRatios)},"errors":${obj(errors.toMap)},"serving":$serving,"serving_sf1":$servingSf1,"sf":"$sfDir"}"""
     // detail path is env-overridable so a different launch cwd can't
     // silently strand the file; failures warn on stderr (stdout must
     // stay the single parseable JSON line). A SPARK_GRAFT_QUERIES

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import graft.functions.expressions.SharedExpr.noInline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1267,9 +1267,10 @@ object Analytics {
     // Catalyst does not dedupe repeated subtrees, so without the
     // persist the lineitem scan + brand semi-join would run twice
     // (the ccnetBuckets precedent; three narrow columns, spillable)
-    val branded = li.select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
-      .join(p.hint("shuffle_hash"), li("l_partkey") === p("p_partkey"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val branded = OpCache.cached("analytics.q17.branded", spark, (dir, OpCache.plan(li))) {
+      li.select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
+        .join(p.hint("shuffle_hash"), li("l_partkey") === p("p_partkey"), "left_semi")
+    }
     val avgQ = branded.groupBy(col("l_partkey"))
       .agg((avg(col("l_quantity")) * 0.2).as("q_thresh"))
     branded.join(avgQ.hint("shuffle_hash"), Seq("l_partkey"))
@@ -1369,13 +1370,14 @@ object Analytics {
     * corpus-proportional → shuffle_hash on suppkey.
     */
   def q15(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("l_shipdate") <  lit("1996-04-01").cast("timestamp"))
-      .groupBy(col("l_suppkey"))
-      .agg(moneyFx(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-             .as("total_rev"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val li = Tables.lineitem(spark, dir)
+    val rev = OpCache.cached("analytics.q15.rev", spark, (dir, OpCache.plan(li))) {
+      li.filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
+                col("l_shipdate") <  lit("1996-04-01").cast("timestamp"))
+        .groupBy(col("l_suppkey"))
+        .agg(moneyFx(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+               .as("total_rev"))
+    }
     val maxRev = rev.agg(max(col("total_rev")).as("max_rev"))
     val s = Tables.supplier(spark, dir)
     rev.crossJoin(broadcast(maxRev))
@@ -1622,12 +1624,13 @@ object Analytics {
     val li = Tables.lineitem(spark, dir)
     val s  = Tables.supplier(spark, dir)
     val n  = Tables.nation(spark, dir).filter(col("n_name") === "NATION_3")
-    val v = li.join(s.hint("shuffle_hash"), li("l_suppkey") === s("s_suppkey"))
-      .join(broadcast(n), s("s_nationkey") === n("n_nationkey"))
-      .groupBy(col("l_partkey").as("p_partkey"))
-      .agg(moneyFx(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-             .as("value_fx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = OpCache.cached("analytics.q11.v", spark, (dir, OpCache.plan(li))) {
+      li.join(s.hint("shuffle_hash"), li("l_suppkey") === s("s_suppkey"))
+        .join(broadcast(n), s("s_nationkey") === n("n_nationkey"))
+        .groupBy(col("l_partkey").as("p_partkey"))
+        .agg(moneyFx(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+               .as("value_fx"))
+    }
     val total = v.agg(sum(col("value_fx").cast("decimal(38,0)")).as("total_fx"),
                       count(lit(1)).as("n_parts"))
     v.crossJoin(broadcast(total))
@@ -1770,9 +1773,9 @@ object Analytics {
         col("l_orderkey") === col("o_orderkey"), "left_semi")
     // three consumers (perOrder, stats, the candidate re-key) — persist
     // the bounded one-row-per-(order,supplier) sketch, q15/q17 precedent
-    val perSupp = li.groupBy(col("l_orderkey"), col("l_suppkey"))
-      .agg(max(col("l_shipdate")).as("m_s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val perSupp = OpCache.cached("analytics.q21.perSupp", spark, (dir, OpCache.plan(li))) {
+      li.groupBy(col("l_orderkey"), col("l_suppkey")).agg(max(col("l_shipdate")).as("m_s"))
+    }
     val perOrder = perSupp.groupBy(col("l_orderkey"))
       .agg(max(col("m_s")).as("m1"), count(lit(1)).as("n_supp"))
     val stats = perSupp
@@ -1989,10 +1992,11 @@ object Analytics {
     val costs = li
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(min(ucost).as("cost_fx"))
-    val ec = costs.join(eu.hint("shuffle_hash"), col("l_suppkey") === col("s_suppkey"))
-      .select(col("l_partkey"), col("cost_fx"), col("s_name"),
-              col("s_acctbal"), col("n_name"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ec = OpCache.cached("analytics.q2.ec", spark, (dir, OpCache.plan(li))) {
+      costs.join(eu.hint("shuffle_hash"), col("l_suppkey") === col("s_suppkey"))
+        .select(col("l_partkey"), col("cost_fx"), col("s_name"),
+                col("s_acctbal"), col("n_name"))
+    }
     val minc = ec.groupBy(col("l_partkey").as("m_partkey"))
       .agg(min(col("cost_fx")).as("min_cost_fx"))
     ec.join(minc.hint("shuffle_hash"),

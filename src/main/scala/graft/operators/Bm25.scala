@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.expressions.Tok
 import graft.plans.ScoreTag
@@ -40,6 +40,19 @@ object Bm25 {
              k1: Double = K1, b: Double = B): DataFrame =
     searchDocs(spark, Tables.documents(spark, dir), query, k, k1, b)
 
+  /** The (doc_id, toks) token arrays of a corpus frame, one slot keyed
+    * by the frame's plan. Tokenization is the scan-side cost shared by
+    * every sparse query (bm25, the batch, all five fusion strategies
+    * and lm_score run it per branch), so one cached pass serves all of
+    * them. At 100 TB this is the posting table you would materialize
+    * once, bucketed by term.
+    */
+  private[operators] def docToks(spark: SparkSession, docs: DataFrame): DataFrame =
+    OpCache.cached("bm25.toks", spark, OpCache.plan(docs)) {
+      Tables.spread(spark, docs.select(col("doc_id"), col("text")))
+        .select(col("doc_id"), tokens(col("text")).as("toks"))
+    }
+
   /** [[search]] over an arbitrary `(doc_id, text, ...)` corpus frame.
     *
     * Single-aggregate formulation: each doc maps to its
@@ -66,15 +79,7 @@ object Bm25 {
     // empty-reduce plan
     if (terms.isEmpty)
       return docs.select(col("doc_id"), lit(0L).as("score", ScoreTag.metadata)).filter(lit(false))
-    // tokenization is the scan-side cost shared by every sparse query
-    // (bm25 + all five fusion strategies run it per branch); persist
-    // lets Spark's cache manager serve all of them from one pass.
-    // At 100 TB this is the posting table you would materialize once,
-    // bucketed by term.
-    val toks = Tables.spread(spark, docs.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = toks.select(col("doc_id"),
+    val counts = docToks(spark, docs).select(col("doc_id"),
       column(graft.functions.expressions.TokenTfs(
         expression(col("toks")), terms)).as("c"))
     val dl = col("c").getItem(0)
@@ -432,13 +437,14 @@ object Bm25 {
     // THE corpus pass: per-doc (dl, [(term, tf)]) — every stage below
     // (feedback scoring, stats, expansion mine, final scoring) reads
     // this one cached relation; nothing re-tokenizes
-    val tc = Tables.spread(spark, docs.select(col("doc_id"), col("text")))
-      .select(col("doc_id"),
-        column(graft.functions.expressions.TermCounts(
-          expression(col("text")))).as("tc"))
-      .select(col("doc_id"),
-        expr("aggregate(tc, 0L, (a, e) -> a + e.tf)").as("dl"), col("tc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tc = OpCache.cached("bm25.prf.termCounts", spark, dir) {
+      Tables.spread(spark, docs.select(col("doc_id"), col("text")))
+        .select(col("doc_id"),
+          column(graft.functions.expressions.TermCounts(
+            expression(col("text")))).as("tc"))
+        .select(col("doc_id"),
+          expr("aggregate(tc, 0L, (a, e) -> a + e.tf)").as("dl"), col("tc"))
+    }
     // feedback arm — value-identical to searchDocs over the same
     // corpus (same IEEE expression tree, same fx(Σ,6) quantization),
     // but riding the shared sketch: orig-term tfs are a TermLookups
@@ -602,11 +608,12 @@ object Bm25 {
     // the only remaining unpartitioned window is the ≤numPartitions
     // offsets prefix-sum — bounded by cluster parallelism, a config
     // constant, never by data.
-    val parted = v.repartitionByRange(col("df").desc, col("term"))
-      .withColumn("_pid", spark_partition_id())
-      // two consumers (local ranks + offsets census) of the
-      // explode+aggregate+range-exchange subtree
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // two consumers (local ranks + offsets census) of the
+    // explode+aggregate+range-exchange subtree
+    val parted = OpCache.cached("bm25.vocabulary.parted", spark, dir) {
+      v.repartitionByRange(col("df").desc, col("term"))
+        .withColumn("_pid", spark_partition_id())
+    }
     val local = parted.withColumn("_lrank",
       row_number().over(Window.partitionBy(col("_pid"))
         .orderBy(col("df").desc, col("term"))).cast("long"))
@@ -859,13 +866,8 @@ object Bm25 {
   def searchBatch(spark: SparkSession, dir: String,
                   queries: Seq[String] = BatchQueries, k: Int = 10): DataFrame = {
     // the stats aggregate and the scoring pass both read the token
-    // arrays; persist so tokenization is paid once (same reasoning as
-    // [[searchDocs]])
-    val toks = Tables.spread(spark,
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    searchBatchToks(toks, queries, k)
+    // arrays: the same cached pass as [[searchDocs]]
+    searchBatchToks(docToks(spark, Tables.documents(spark, dir)), queries, k)
   }
 
   /** [[searchBatch]] over a caller-supplied (doc_id, toks) relation —

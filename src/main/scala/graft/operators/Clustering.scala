@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import graft.OracleNum.{fx, fxSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -122,13 +122,11 @@ object Clustering {
     * partials; the join back is a broadcast of k = [[KmeansK]] rows
     * (constant-bounded by construction). The assignment is persisted
     * because moments + output are two consumers of the iterative
-    * Lloyd lineage; the plan is parameter-free so the CacheManager
-    * holds one entry per session, not one per call.
+    * Lloyd lineage, in one slot keyed by the dir.
     */
   def embedOutliers(spark: SparkSession, dir: String): DataFrame = {
     val D = "decimal(38,0)"
-    val asg = finalAssign(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val asg = OpCache.cached("clustering.outliers.assign", spark, dir)(finalAssign(spark, dir))
     val stats = asg.groupBy(col("cluster"))
       .agg(count(lit(1)).cast(D).as("n"),
         sum(col("dist")).cast(D).as("s"),
@@ -242,12 +240,13 @@ object Clustering {
     val ct = tf.join(asg.hint("shuffle_hash"), Seq("doc_id"))
       .groupBy(col("cluster"), col("term")).agg(sum(col("tf")).as("ctf"))
     val cdf = ct.groupBy(col("term")).agg(count(lit(1)).as("cdf"))
-    val scored = ct.join(cdf.hint("shuffle_hash"), Seq("term"))
-      .select(col("cluster"), col("term"),
-        fx(col("ctf").cast("double") * log(lit(KmeansK.toDouble) / col("cdf")))
-          .as("score"),
-        hash60(col("term")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val scored = OpCache.cached("clustering.topics.scored", spark, dir) {
+      ct.join(cdf.hint("shuffle_hash"), Seq("term"))
+        .select(col("cluster"), col("term"),
+          fx(col("ctf").cast("double") * log(lit(KmeansK.toDouble) / col("cdf")))
+            .as("score"),
+          hash60(col("term")).as("h"))
+    }
     // long-scored heap: the fx'd score is a BIGINT — TopKLongAgg keeps
     // ranking exact past 2^53 where a double score slot would round
     val top = scored.groupBy(col("cluster"))
@@ -473,7 +472,6 @@ object Clustering {
     * [[graphPagerankTop]]'s TakeOrdered instead.
     */
   def graphPagerank(spark: SparkSession, dir: String, iters: Int = PrIters): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // the sparse-contribution iterate below has no round-0 relation:
     // a 0-iteration call would dereference contribs.get (the dense
     // form used to return uniform base ranks) — fail loudly instead
@@ -487,8 +485,9 @@ object Clustering {
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // the per-iteration input: every iteration re-reads this relation,
     // so it persists once
-    val withDeg = edges.join(outdeg.hint("shuffle_hash"), Seq("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val withDeg = OpCache.cached("clustering.pagerank.withDeg", spark, dir) {
+      edges.join(outdeg.hint("shuffle_hash"), Seq("src"))
+    }
     // Iterate on the SPARSE contribution relation, not the dense rank
     // vector (r10): r_i(v) = 150000 + (85·contrib_i(v)) DIV 100 with
     // contrib_i(v) = 0 when v received nothing, so the rank is a pure

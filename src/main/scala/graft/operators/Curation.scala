@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -323,12 +323,11 @@ object Curation {
     * [[curationFunnel]]: one row per document with 0/1 columns for
     * every gate (eval split, exact dup, near dup, contaminated,
     * repetitive). Both composites derive from this ONE relation, and
-    * it is persisted — within a session the expensive near-dup
-    * cluster pass (full minhash + label propagation) runs once and
-    * the second composite rides the cache (Spark's plan-fingerprint
-    * CacheManager matches the shared subtree), exactly the
-    * derived-relation reuse a 100 TB curation run materializes
-    * between its verdict and its gate-ablation report.
+    * it is cached in an [[OpCache]] slot keyed by the dir — within a
+    * session the expensive near-dup cluster pass (full minhash + label
+    * propagation) runs once and the second composite rides the cache,
+    * exactly the derived-relation reuse a 100 TB curation run
+    * materializes between its verdict and its gate-ablation report.
     */
   private[graft] def curationFlags(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.hash60
@@ -349,18 +348,19 @@ object Curation {
     val repetitive = textRepetition(spark, dir)
       .filter(col("is_repetitive") === 1L)
       .select(col("doc_id"), lit(1L).as("f_rep"))
-    docs.select(col("doc_id"))
-      .join(exactDup.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .join(nearDup.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .join(contaminated.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .join(repetitive.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (col("doc_id") % EvalMod === 0).cast("long").as("g_eval"),
-        coalesce(col("f_exact"), lit(0L)).as("g_exact"),
-        coalesce(col("f_near"), lit(0L)).as("g_near"),
-        coalesce(col("f_cont"), lit(0L)).as("g_cont"),
-        coalesce(col("f_rep"), lit(0L)).as("g_rep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    OpCache.cached("curation.flags", spark, dir) {
+      docs.select(col("doc_id"))
+        .join(exactDup.hint("shuffle_hash"), Seq("doc_id"), "left")
+        .join(nearDup.hint("shuffle_hash"), Seq("doc_id"), "left")
+        .join(contaminated.hint("shuffle_hash"), Seq("doc_id"), "left")
+        .join(repetitive.hint("shuffle_hash"), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          (col("doc_id") % EvalMod === 0).cast("long").as("g_eval"),
+          coalesce(col("f_exact"), lit(0L)).as("g_exact"),
+          coalesce(col("f_near"), lit(0L)).as("g_near"),
+          coalesce(col("f_cont"), lit(0L)).as("g_cont"),
+          coalesce(col("f_rep"), lit(0L)).as("g_rep"))
+    }
   }
 
   def curateCorpus(spark: SparkSession, dir: String): DataFrame = {
@@ -644,13 +644,14 @@ object Curation {
     // pipeline runs twice (measured 68 → 36s at a 500k-doc sf10, the
     // dsirInst lifecycle rationale). The cached rows are 4 scalars per
     // doc — far below the text they replace — and disk-spillable.
-    val docs = Tables.spread(spark,
-        Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text")))
-      .select(col("doc_id"), col("source"),
-        nToks.cast("long").as("toks"), fx(q, 6).as("q6"))
-      .select(col("doc_id"), col("source"), col("toks"),
-        expr("q6 DIV 10000").as("qbkt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = OpCache.cached("curation.tokenBudget.docs", spark, dir) {
+      Tables.spread(spark,
+          Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text")))
+        .select(col("doc_id"), col("source"),
+          nToks.cast("long").as("toks"), fx(q, 6).as("q6"))
+        .select(col("doc_id"), col("source"), col("toks"),
+          expr("q6 DIV 10000").as("qbkt"))
+    }
     val wBp = weights.foldLeft(Option.empty[Column]) {
       case (None, (s, w))    => Some(when(col("source") === s, w.toLong))
       case (Some(c), (s, w)) => Some(c.when(col("source") === s, w.toLong))
@@ -889,8 +890,9 @@ object Curation {
     val scored = TextAnalysis.lmScore(spark, dir)
       .select(col("doc_id"), col("mean_surprise_fx"))
     val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-    val docs = scored.join(src.hint("shuffle_hash"), Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = OpCache.cached("curation.ccnet.docs", spark, dir) {
+      scored.join(src.hint("shuffle_hash"), Seq("doc_id"))
+    }
     val ts = thresholds(col("mean_surprise_fx"))
     val thr = docs.groupBy(col("source")).agg(ts.head, ts.tail: _*)
     docs.join(thr.hint("shuffle_hash"), Seq("source"))
@@ -1111,12 +1113,13 @@ object Curation {
       maxElems: Long = SemEvalBroadcastMaxElems): DataFrame = {
     val planes = VectorSearch.lshPlanes(64, VectorSearch.LshPlanes)
     val banded = vecs.withColumn("bucket", VectorSearch.lshBucket(col("emb"), planes))
-    val eval = banded.filter(col("vec_id") % EvalMod === 0)
-      .select(col("bucket"), col("emb").as("eemb"))
-      // two consumers (the gate and the join): without the cache the
-      // eval scan runs twice, and the gate's whole point is to stay
-      // cheaper than the work it gates
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // two consumers (the gate and the join): without the cache the
+    // eval scan runs twice, and the gate's whole point is to stay
+    // cheaper than the work it gates
+    val eval = OpCache.cached("curation.semantic.eval", vecs.sparkSession, OpCache.plan(vecs)) {
+      banded.filter(col("vec_id") % EvalMod === 0)
+        .select(col("bucket"), col("emb").as("eemb"))
+    }
     // measured gate: broadcast only when the ACTUAL eval payload fits
     // (row count alone does not bound bytes — embedding width does)
     val (nEval, evElems) = {
@@ -1277,29 +1280,30 @@ object Curation {
     */
   private[graft] def dsirInst(spark: SparkSession, dir: String): DataFrame = {
     val B = DsirBuckets.toLong
-    Tables.spread(spark,
-        Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text")))
-      .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("source"),
-        explode(concat(col("toks"), wordShingles(col("toks"), 2))).as("g"))
-      .select(col("doc_id"), col("source"), (hash60(col("g")) % B).as("b"))
-      // the gram stream shuffles ONCE, keyed on doc_id (r11): hash
-      // partitioning by doc_id is a valid clustering for the
-      // (doc, source, bucket) aggregate below AND for every
-      // doc_id-keyed consumer above the cache — the scoring
-      // aggregate and its join side in [[dsirWeightsUnsorted]] reuse
-      // this exchange instead of re-shuffling the whole compressed
-      // relation a second time. The trade is losing map-side partial
-      // aggregation on this exchange, which is worth ~3-5% here: a
-      // doc's grams hash into [[DsirBuckets]] buckets nearly
-      // injectively (200-2000 grams into 4096 buckets), so partials
-      // barely compress. Skew exposure is unchanged — a giant doc's
-      // grams were already produced by the single task holding its
-      // row, and the per-doc aggregate state is bucket-bounded.
-      .repartition(col("doc_id"))
-      .groupBy(col("doc_id"), col("source"), col("b"))
-      .agg(count(lit(1)).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    OpCache.cached("curation.dsir.inst", spark, dir) {
+      Tables.spread(spark,
+          Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text")))
+        .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
+        .select(col("doc_id"), col("source"),
+          explode(concat(col("toks"), wordShingles(col("toks"), 2))).as("g"))
+        .select(col("doc_id"), col("source"), (hash60(col("g")) % B).as("b"))
+        // the gram stream shuffles ONCE, keyed on doc_id (r11): hash
+        // partitioning by doc_id is a valid clustering for the
+        // (doc, source, bucket) aggregate below AND for every
+        // doc_id-keyed consumer above the cache — the scoring
+        // aggregate and its join side in [[dsirWeightsUnsorted]] reuse
+        // this exchange instead of re-shuffling the whole compressed
+        // relation a second time. The trade is losing map-side partial
+        // aggregation on this exchange, which is worth ~3-5% here: a
+        // doc's grams hash into [[DsirBuckets]] buckets nearly
+        // injectively (200-2000 grams into 4096 buckets), so partials
+        // barely compress. Skew exposure is unchanged — a giant doc's
+        // grams were already produced by the single task holding its
+        // row, and the per-doc aggregate state is bucket-bounded.
+        .repartition(col("doc_id"))
+        .groupBy(col("doc_id"), col("source"), col("b"))
+        .agg(count(lit(1)).as("k"))
+    }
   }
 
   /** Both DSIR bucket-count tables in ONE aggregate over [[dsirInst]]:

@@ -77,27 +77,28 @@ object Dedup {
     * keys, so each source costs one keyed exchange; no bucket is ever
     * dropped.
     */
-  private def saltedPairs(df: DataFrame, keys: Seq[String], idCol: String,
+  private def saltedPairs(slot: String, df: DataFrame, keys: Seq[String], idCol: String,
                           payload: Seq[String],
                           hotExplode: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val spark = df.sparkSession
     val kc = keys.map(col)
     val skc = kc :+ col("salt")
-    // persist the two window-counted frames: six pair-branch sides
+    // cache the two window-counted frames: six pair-branch sides
     // consume them (small x2, subSmall x2, subBig x2) and Spark plans
     // each side as an independent subtree — without the cache the
     // whole upstream sketch pipeline (scan + fingerprint map + keyed
     // exchange + window) executes once PER SIDE (observed 6x in the
     // physical plan). Both frames are bucket-keyed and tiny relative
-    // to the corpus; the plans are parameter-free so the CacheManager
-    // holds one entry per operator, not one per query.
-    val counted = df.withColumn("_bn", count(lit(1)).over(Window.partitionBy(kc: _*)))
-      .persist(lvl)
+    // to the corpus; each caller passes its own slot prefix.
+    val counted = OpCache.cached(s"$slot.counted", spark, (OpCache.plan(df), keys)) {
+      df.withColumn("_bn", count(lit(1)).over(Window.partitionBy(kc: _*)))
+    }
     val small = counted.filter(col("_bn") >= 2 && col("_bn") <= MaxBucket).drop("_bn")
-    val hot = hotExplode(counted.filter(col("_bn") > MaxBucket).drop("_bn"))
-      .withColumn("_sn", count(lit(1)).over(Window.partitionBy(skc: _*)))
-      .persist(lvl)
+    val hotIn = hotExplode(counted.filter(col("_bn") > MaxBucket).drop("_bn"))
+    val hot = OpCache.cached(s"$slot.hot", spark, (OpCache.plan(hotIn), keys)) {
+      hotIn.withColumn("_sn", count(lit(1)).over(Window.partitionBy(skc: _*)))
+    }
     val subSmall = hot.filter(col("_sn") >= 2 && col("_sn") <= MaxBucket).drop("_sn")
     val subBig = hot.filter(col("_sn") > MaxBucket).drop("_sn")
       .withColumn("_rep", min(col(idCol)).over(Window.partitionBy(skc: _*)))
@@ -228,12 +229,13 @@ object Dedup {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     val hashes = column(graft.functions.expressions.ShingleHashes(
       expression(col("text")), 3, P))
-    Tables.spread(spark, Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-      .select(col("doc_id"), hashes.as("sh"))
-      // the sketch feeds 3+ plan branches (sigs/candidates/verify);
-      // Spark has no subtree reuse across different shuffle keys, so
-      // without this the tokenize+md5 pipeline runs once per branch.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the sketch feeds 3+ plan branches (sigs/candidates/verify);
+    // Spark has no subtree reuse across different shuffle keys, so
+    // without the cache the tokenize+md5 pipeline runs once per branch.
+    OpCache.cached("dedup.shingleDocs", spark, dir) {
+      Tables.spread(spark, Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+        .select(col("doc_id"), hashes.as("sh"))
+    }
   }
 
   private def pairOverlap(a: Column, b: Column): Column = {
@@ -612,7 +614,7 @@ object Dedup {
           lit(1L * 16384) + shiftright(col("rem"), 11).bitwiseAND(0x7FF),
           lit(2L * 16384) + shiftright(col("rem"), 22).bitwiseAND(0x7FF),
           lit(3L * 16384) + shiftright(col("rem"), 33))))
-    saltedPairs(banded, Seq("band", "bits"), "doc_id", Seq("words"), hotExplode)
+    saltedPairs("dedup.simhash", banded, Seq("band", "bits"), "doc_id", Seq("words"), hotExplode)
       .select(col("id1"), col("id2"),
         hammingDistance(col("words1"), col("words2")).as("hamming"))
       .distinct()
@@ -690,14 +692,15 @@ object Dedup {
     val posting = docs.select(col("doc_id"), explode(col("sh")).as("h"))
     // df rides a window over the SAME h-partitioning the candidate
     // self-join shuffles on (one keyed exchange total), instead of a
-    // separate groupBy(h) aggregate joined back in; persisted because
+    // separate groupBy(h) aggregate joined back in; cached because
     // both self-join sides consume it as independent subtrees (same
     // 6x-replan pathology as saltedPairs, here 2x)
-    val rarePosting = posting
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
-      .filter(col("df") <= dfCap && col("df") >= 2)
-      .select(col("h"), col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rarePosting = OpCache.cached("dedup.ngram.rarePosting", spark, (dir, dfCap)) {
+      posting
+        .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
+        .filter(col("df") <= dfCap && col("df") >= 2)
+        .select(col("h"), col("doc_id"))
+    }
     val cand = rarePosting.select(col("h"), col("doc_id").as("id1"))
       .join(rarePosting.select(col("h"), col("doc_id").as("id2")), "h")
       .filter(col("id1") < col("id2"))
@@ -1020,7 +1023,7 @@ object Dedup {
       .withColumn("bucket", VectorSearch.lshBucket(col("emb"), base))
     val hotExplode: DataFrame => DataFrame =
       _.withColumn("salt", VectorSearch.lshBucket(col("emb"), extra))
-    saltedPairs(banded, Seq("bucket"), "vec_id", Seq("emb"), hotExplode)
+    saltedPairs("dedup.embedding", banded, Seq("bucket"), "vec_id", Seq("emb"), hotExplode)
       .select(col("id1"), col("id2"),
         fx(cosineSimilarity(col("emb1"), col("emb2")), 6).as("cosine"))
       .orderBy(col("cosine").desc, col("id1"), col("id2"))
@@ -1212,12 +1215,12 @@ object Dedup {
     */
   private[graft] def winnowPairsFromDocs(docs: DataFrame, minShared: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sel = winnowFingerprints(docs)
-    val rare = sel
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
-      .filter(col("df") >= 2 && col("df") <= MaxBucket)
-      .select(col("h"), col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rare = OpCache.cached("dedup.winnow.rare", docs.sparkSession, OpCache.plan(docs)) {
+      winnowFingerprints(docs)
+        .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
+        .filter(col("df") >= 2 && col("df") <= MaxBucket)
+        .select(col("h"), col("doc_id"))
+    }
     rare.select(col("h"), col("doc_id").as("id1"))
       .join(rare.select(col("h"), col("doc_id").as("id2")), "h")
       .filter(col("id1") < col("id2"))
@@ -1508,20 +1511,20 @@ object Dedup {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     val hashes = column(graft.functions.expressions.ShingleHashes(
       expression(col("text")), 3, P))
-    Tables.spread(spark, Tables.documents(spark, dir)
-        .filter(col("doc_id") % IncrMod === IncrRes)
-        .select(col("doc_id"), col("text")))
-      .select(col("doc_id"), hashes.as("sh"))
-      // two consumers: batch bands + batch-side Jaccard verify
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // re-state the increment predicate ABOVE the cache: every row
-      // already satisfies it (no-op at runtime), but an
-      // InMemoryRelation hides its child's filters, and without a
-      // visible selective predicate on the probe side Catalyst's
-      // PartitionPruning rule refuses to inject the dynamic partition
-      // filter into the band-layout scan (VectorIndexSpec pins the
-      // `dynamicpruning` marker on this path)
-      .filter(col("doc_id") % IncrMod === IncrRes)
+    // two consumers: batch bands + batch-side Jaccard verify. The
+    // increment predicate is re-stated ABOVE the cache: every row
+    // already satisfies it (no-op at runtime), but an
+    // InMemoryRelation hides its child's filters, and without a
+    // visible selective predicate on the probe side Catalyst's
+    // PartitionPruning rule refuses to inject the dynamic partition
+    // filter into the band-layout scan (VectorIndexSpec pins the
+    // `dynamicpruning` marker on this path)
+    OpCache.cached("dedup.batchShingles", spark, dir) {
+      Tables.spread(spark, Tables.documents(spark, dir)
+          .filter(col("doc_id") % IncrMod === IncrRes)
+          .select(col("doc_id"), col("text")))
+        .select(col("doc_id"), hashes.as("sh"))
+    }.filter(col("doc_id") % IncrMod === IncrRes)
   }
 
   /** [[minhashIncremental]] served from the persisted MinHash band
@@ -1548,22 +1551,23 @@ object Dedup {
     // the build's persisted sub-bucket modulus: probing with any other
     // value would look in the wrong directories
     val bktMod = spark.read.parquet(path + "_meta").head.getAs[Long]("bkt_mod")
-    // persisted: the banded increment feeds BOTH the probe-key
+    // cached: the banded increment feeds BOTH the probe-key
     // broadcast and the candidate join — without the cache the
     // MinHash signing of the whole increment runs twice (measured
-    // ~1s/pass at a 50k-doc increment, r9 sf10 crossover study)
-    val batchB = minhashBands(batchSh)
-      .withColumn("bkt", pmod(col("band_key"), lit(bktMod)).cast("int"))
-      .select(col("doc_id").as("id1"), col("band"), col("bkt"), col("band_key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // a runtime-no-op comparison ABOVE the cache (band is always in
-      // [0, NumBands)): PartitionPruning refuses to inject the dynamic
-      // partition filter unless the probe side shows a likely-selective
-      // predicate, and the InMemoryRelation hides everything below it
-      // — same contract as batchShingles, but valid for ANY probe
-      // batch (this API also serves arbitrary-id probes, e.g. the e2e
-      // ingestion spec's newly-streamed documents)
-      .filter(col("band") >= 0)
+    // ~1s/pass at a 50k-doc increment, r9 sf10 crossover study).
+    // Above the cache, a runtime-no-op comparison (band is always in
+    // [0, NumBands)): PartitionPruning refuses to inject the dynamic
+    // partition filter unless the probe side shows a likely-selective
+    // predicate, and the InMemoryRelation hides everything below it
+    // — same contract as batchShingles, but valid for ANY probe
+    // batch (this API also serves arbitrary-id probes, e.g. the e2e
+    // ingestion spec's newly-streamed documents)
+    val key = (path, bktMod, OpCache.plan(batchSh))
+    val batchB = OpCache.cached("dedup.incremental.batchBands", spark, key) {
+      minhashBands(batchSh)
+        .withColumn("bkt", pmod(col("band_key"), lit(bktMod)).cast("int"))
+        .select(col("doc_id").as("id1"), col("band"), col("bkt"), col("band_key"))
+    }.filter(col("band") >= 0)
     // tiny distinct probe-key set: broadcast side of the DPP join
     val probeKeys = batchB.select(col("band"), col("bkt"), col("band_key")).distinct()
     val layout = spark.read.parquet(path)
@@ -1573,10 +1577,11 @@ object Dedup {
         .over(Window.partitionBy(col("band"), col("band_key"))))
       .filter(col("_bn") <= MaxBucket)
       .select(col("doc_id").as("id2"), col("band"), col("band_key"))
-    val cand = batchB
-      .join(corpusB.hint("shuffle_hash"), Seq("band", "band_key"))
-      .select(col("id1"), col("id2")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = OpCache.cached("dedup.incremental.cand", spark, key) {
+      batchB
+        .join(corpusB.hint("shuffle_hash"), Seq("band", "band_key"))
+        .select(col("id1"), col("id2")).distinct()
+    }
     // The candidate count picks the VERIFY strategy, exactly as the
     // components solve gates local vs distributed: the r9 sf10
     // crossover study measured a ~6.5s probe FLOOR independent of

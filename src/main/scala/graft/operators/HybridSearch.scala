@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.OracleNum
+import graft.{OpCache, OracleNum}
 import graft.functions.expressions.Tok
 import graft.plans.ScoreTag
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -224,8 +224,8 @@ object HybridSearch {
     * [[graft.functions.TextFunctions.tokens]] array the sparse branch
     * scores and `ts` holds one (query_id, containment score) struct
     * per query with terms — both row-local projections of the same
-    * scan. Persisted: two branch subtrees consume it, and Spark has
-    * no cross-branch subtree reuse.
+    * scan. Cached, keyed by (dir, queries): two branch subtrees
+    * consume it, and Spark has no cross-branch subtree reuse.
     */
   private def corpusSketch(spark: SparkSession, dir: String,
                            queries: Seq[String]): DataFrame = {
@@ -244,11 +244,12 @@ object HybridSearch {
     }
     val ts = if (perQ.isEmpty) array().cast("array<struct<query_id:bigint,s:bigint>>")
       else array(perQ: _*)
-    graft.Tables.spread(spark,
-        graft.Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-      .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("toks"),
-        ts.as("ts"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    OpCache.cached("hybrid.corpusSketch", spark, (dir, queries)) {
+      graft.Tables.spread(spark,
+          graft.Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+        .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("toks"),
+          ts.as("ts"))
+    }
   }
 
   /** Token-containment text branch for the batch, read off the shared

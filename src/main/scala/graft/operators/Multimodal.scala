@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{OracleNum, Tables}
 import graft.functions.expressions.{ParseMediaHeader, SynthMedia}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
@@ -24,14 +24,6 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
   */
 object Multimodal {
   import OracleNum.fxSql
-
-  /** A binary media asset row. */
-  final case class MediaAsset(asset_id: Long, media_type: String, payload: Array[Byte])
-
-  /** Decoded metadata. */
-  final case class DecodedMeta(asset_id: Long, media_type: String,
-                               n_bytes: Long, width: Long, height: Long,
-                               frames: Long, sample_rate: Long)
 
   /** doc_id → media type assignment (1/3 each). */
   private def mediaTypeCol: Column =
@@ -192,40 +184,6 @@ object Multimodal {
        |  (height * $box // greatest(width, height))::BIGINT AS new_height
        |FROM m
        |ORDER BY asset_id""".stripMargin
-
-  /** Batched per-partition decode — the execution shape a real codec
-    * would use (decode N payloads per partition without per-row JVM
-    * crossings), running the same real header parser as the column
-    * path.
-    */
-  def decodeBatch(spark: SparkSession, assets: Dataset[MediaAsset]): Dataset[DecodedMeta] = {
-    import spark.implicits._
-    import graft.functions.expressions.{ParseMediaHeader => P}
-    assets.mapPartitions { it =>
-      // real implementation: load codec once per partition, then
-      // decode each payload — here the "codec" is the header parser
-      it.map { a =>
-        val h = P.compute(a.payload)
-        val kind = h.getLong(P.Kind) match {
-          case 0 => "image"; case 1 => "audio"; case 2 => "video"; case _ => "unknown"
-        }
-        DecodedMeta(a.asset_id, kind, a.payload.length.toLong,
-          h.getLong(P.Width), h.getLong(P.Height), h.getLong(P.Frames),
-          h.getLong(P.SampleRate))
-      }
-    }
-  }
-
-  /** Build a MediaAsset dataset of real containers from the documents
-    * table.
-    */
-  def assets(spark: SparkSession, dir: String): Dataset[MediaAsset] = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .select(col("doc_id").as("asset_id"), mediaTypeCol.as("media_type"),
-        assetCol.as("payload"))
-      .as[MediaAsset]
-  }
 
   /** Perceptual near-dup grouping over the IMAGE assets — media dedup
     * by content, not bytes: each container is hashed with the 60-bit

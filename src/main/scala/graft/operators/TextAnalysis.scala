@@ -539,20 +539,15 @@ object TextAnalysis {
     * on doc_id, zero sorts, no broadcast of unbounded relations.
     */
   def lmScore(spark: SparkSession, dir: String): DataFrame = {
-    // the tokenized corpus persists (r10): THREE branches consume it —
-    // the vocabulary scalar, the bigram instance stream, and (pruned)
-    // the all-docs base of the final left join — and without the cache
-    // the vocab and instance branches each re-ran the full
-    // regex-tokenize scan on every invocation (two corpus passes per
-    // call; the Bm25 searchDocs precedent: this is the token
-    // materialization a standing pipeline keeps)
-    // all three lmScore persists ride [[graft.OpCache]] (r11): one
-    // live relation per slot, evicted on corpus change
-    val base = OpCache.cached("lm.base", spark, dir) {
-      Tables.spread(spark,
-          Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-    }
+    // the tokenized corpus is cached (r10): THREE branches consume it
+    // — the vocabulary scalar, the bigram instance stream, and
+    // (pruned) the all-docs base of the final left join — and without
+    // the cache the vocab and instance branches each re-ran the full
+    // regex-tokenize scan on every invocation. It is the same token
+    // relation BM25 scores, so it rides Bm25's slot; the other two
+    // lmScore relations have [[graft.OpCache]] slots of their own,
+    // evicted on corpus change
+    val base = Bm25.docToks(spark, Tables.documents(spark, dir))
     val vocab = base.select(explode(col("toks")).as("w"))
       .agg(countDistinct(col("w")).as("v"))
     val surprise = fx(log((col("c1") + col("v")).cast("double") /
@@ -586,12 +581,12 @@ object TextAnalysis {
     // (bc) and the scoring join — uncached, the scoring pass re-ran
     // the explode + instance aggregate (the plan's one big shuffle)
     // on every invocation even though bc was served from cache
-    val inst = OpCache.cached("lm.inst", spark, dir) {
+    val inst = OpCache.cached("text.lm.inst", spark, dir) {
       base
         .select(col("doc_id"), explode(wordShingles(col("toks"), 2)).as("b"))
         .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("k"))
     }
-    val bc = OpCache.cached("lm.bc", spark, dir) {
+    val bc = OpCache.cached("text.lm.bc", spark, dir) {
       inst.groupBy(col("b")).agg(sum(col("k")).as("c12"))
     }
     val uc = bc.select(substring_index(col("b"), " ", 1).as("w"), col("c12"))
@@ -851,18 +846,6 @@ object TextAnalysis {
     (merges, segd)
   }
 
-  /** One trained model per corpus per JVM: the whole bpe_* family
-    * (train / token_count / encode / vocab) AND the serving tier's
-    * loadBpe consume the identical artifact, so a verify+bench session
-    * that runs all five no longer repeats the training loop five
-    * times or strands five cached copies of the word table. Keyed by
-    * the documents table's physical file listing (path, length,
-    * mtime), so an overwritten corpus retrains — a temp-dir reuse
-    * can't serve a stale model.
-    */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Int, String, String, Long)], Map[String, Long], DataFrame)]()
-
   private def corpusFingerprint(spark: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -877,66 +860,75 @@ object TextAnalysis {
     s"$dir#$h"
   }
 
+  /** The BPE trainers' input: (w, freq, seg) — one row per distinct
+    * word with its corpus frequency and initial one-symbol-per-char
+    * segmentation. Each trainer persists it for its merge loop only.
+    */
+  private def bpeWordTable(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    Tables.spread(spark,
+        Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+      .select(explode(column(graft.functions.expressions.TermCounts(
+        expression(col("text"))))).as("e"))
+      .select(col("e.term").as("w"), col("e.tf").as("tf"))
+      .groupBy(col("w")).agg(sum(col("tf")).as("freq"))
+      .select(col("w"), col("freq"), segInit(col("w")).as("seg"))
+  }
+
+  /** One trained model per corpus: the whole bpe_* family (train /
+    * token_count / encode / vocab) AND the serving tier's loadBpe
+    * consume the identical artifact, so a verify+bench session that
+    * runs all five trains once. The model (merge list, piece ids) is
+    * an [[OpCache]] memo and its final segmentation an OpCache
+    * relation, both keyed by the documents table's physical file
+    * listing (path, length, mtime): an overwritten corpus retrains,
+    * and a new corpus rebinds both slots, unpersisting the previous
+    * segmentation.
+    */
   private def bpeTrained(spark: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], Map[String, Long], DataFrame) = {
     val fp = corpusFingerprint(spark, dir)
-    // bound (r11, advisor ask): ONE live trained model per JVM — a new
-    // corpus evicts the previous entry and unpersists its segmentation
-    // table, so sessions that visit many dirs don't strand one cached
-    // word table per corpus
-    val prior = bpeCache.get(fp)
-    if (prior == null && !bpeCache.isEmpty) {
-      bpeCache.forEach((_, v) =>
-        try v._3.unpersist() catch { case _: Exception => () })
-      bpeCache.clear()
-    }
-    bpeCache.computeIfAbsent(fp, _ => {
-      import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-      val words = Tables.spread(spark,
-          Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-        .select(explode(column(graft.functions.expressions.TermCounts(
-          expression(col("text"))))).as("e"))
-        .select(col("e.term").as("w"), col("e.tf").as("tf"))
-        .groupBy(col("w")).agg(sum(col("tf")).as("freq"))
-        .select(col("w"), col("freq"), segInit(col("w")).as("seg"))
+    OpCache.memo("text.bpe.model", spark, fp) {
+      val words = bpeWordTable(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val merges = Seq.newBuilder[(Int, String, String, Long)]
-      var cur = words
-      var rank = 1
-      var exhausted = false
-      while (rank <= BpeMerges && !exhausted) {
-        val best = cur
-          .select(col("freq"), explode(segPairs(segSymbols(col("seg")))).as("pair"))
-          .groupBy(col("pair")).agg(sum(col("freq")).as("cnt"))
-          .orderBy(col("cnt").desc, col("pair"))
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val pair = best(0).getString(0)
-          val cnt = best(0).getLong(1)
-          val Array(lhs, rhs) = pair.split(" ", 2)
-          merges += ((rank, lhs, rhs, cnt))
-          cur = cur.withColumn("seg",
-            replace(col("seg"), lit(s" $lhs  $rhs "), lit(s" $lhs$rhs ")))
-          rank += 1
+      val (mergesList, segd) = try {
+        val merges = Seq.newBuilder[(Int, String, String, Long)]
+        var cur = words
+        var rank = 1
+        var exhausted = false
+        while (rank <= BpeMerges && !exhausted) {
+          val best = cur
+            .select(col("freq"), explode(segPairs(segSymbols(col("seg")))).as("pair"))
+            .groupBy(col("pair")).agg(sum(col("freq")).as("cnt"))
+            .orderBy(col("cnt").desc, col("pair"))
+            .limit(1).collect()
+          if (best.isEmpty) exhausted = true
+          else {
+            val pair = best(0).getString(0)
+            val cnt = best(0).getLong(1)
+            val Array(lhs, rhs) = pair.split(" ", 2)
+            merges += ((rank, lhs, rhs, cnt))
+            cur = cur.withColumn("seg",
+              replace(col("seg"), lit(s" $lhs  $rhs "), lit(s" $lhs$rhs ")))
+            rank += 1
+          }
         }
-      }
-      // the shared artifact is the FINAL segmentation: persist it,
-      // materialize, then release the raw word table — keeping both
-      // cached doubled the resident footprint for a relation no
-      // consumer reads again (every downstream join/aggregate starts
-      // from segd)
-      val segd = cur.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      segd.count()
-      words.unpersist()
-      val mergesList = merges.result()
+        // the shared artifact is the FINAL segmentation: cache it,
+        // materialize, then release the raw word table — keeping both
+        // cached doubled the resident footprint for a relation no
+        // consumer reads again (every downstream join/aggregate starts
+        // from segd)
+        val segd = OpCache.cached("text.bpe.segmentation", spark, fp)(cur)
+        segd.count()
+        (merges.result(), segd)
+      } finally words.unpersist()
       val chars = segd.select(explode(split(col("w"), "")).as("piece")).distinct()
         .collect().map(_.getString(0)).sorted.toSeq
       val ids = chars.zipWithIndex.map { case (c, i) => (c, i.toLong) } ++
         mergesList.map { case (r, l, rr, _) => (l + rr, chars.length + r - 1L) }
       val pid = ids.groupBy(_._1).map { case (p, vs) => (p, vs.map(_._2).max) }
       (mergesList, pid, segd)
-    })
+    }
   }
 
   /** The learned BPE merge table: one row per merge round —
@@ -989,64 +981,58 @@ object TextAnalysis {
   private[graft] def bpeLearnBatchedCounted(spark: SparkSession, dir: String,
                                             totalMerges: Int, batchM: Int)
       : (Seq[(Int, String, String, Long)], Int) = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     require(batchM >= 1, "batchM must be >= 1")
-    val words = Tables.spread(spark,
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-      .select(explode(column(graft.functions.expressions.TermCounts(
-        expression(col("text"))))).as("e"))
-      .select(col("e.term").as("w"), col("e.tf").as("tf"))
-      .groupBy(col("w")).agg(sum(col("tf")).as("freq"))
-      .select(col("w"), col("freq"), segInit(col("w")).as("seg"))
+    val words = bpeWordTable(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var cur = words
-    var rank = 1
-    var exhausted = false
-    var sinceCheckpoint = 0
-    var rounds = 0
-    while (rank <= totalMerges && !exhausted) {
-      rounds += 1
-      val m = math.min(batchM, totalMerges - rank + 1)
-      val top = cur
-        .select(col("freq"), explode(segPairs(segSymbols(col("seg")))).as("pair"))
-        .groupBy(col("pair")).agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("pair"))
-        .limit(m * BpeBatchOverFetch).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val used = scala.collection.mutable.Set.empty[String]
-        var picked = 0
-        var i = 0
-        while (i < top.length && picked < m) {
-          val pair = top(i).getString(0)
-          val Array(lhs, rhs) = pair.split(" ", 2)
-          if (!used(lhs) && !used(rhs)) {
-            // reserve the merged surface too: a later same-round pick
-            // naming it (e.g. (ab, c) after (a, b)) would carry a
-            // count the earlier merge just changed
-            used += lhs; used += rhs; used += lhs + rhs
-            merges += ((rank, lhs, rhs, top(i).getLong(1)))
-            cur = cur.withColumn("seg",
-              replace(col("seg"), lit(s" $lhs  $rhs "), lit(s" $lhs$rhs ")))
-            rank += 1
-            picked += 1
+    try {
+      val merges = Seq.newBuilder[(Int, String, String, Long)]
+      var cur = words
+      var rank = 1
+      var exhausted = false
+      var sinceCheckpoint = 0
+      var rounds = 0
+      while (rank <= totalMerges && !exhausted) {
+        rounds += 1
+        val m = math.min(batchM, totalMerges - rank + 1)
+        val top = cur
+          .select(col("freq"), explode(segPairs(segSymbols(col("seg")))).as("pair"))
+          .groupBy(col("pair")).agg(sum(col("freq")).as("cnt"))
+          .orderBy(col("cnt").desc, col("pair"))
+          .limit(m * BpeBatchOverFetch).collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val used = scala.collection.mutable.Set.empty[String]
+          var picked = 0
+          var i = 0
+          while (i < top.length && picked < m) {
+            val pair = top(i).getString(0)
+            val Array(lhs, rhs) = pair.split(" ", 2)
+            if (!used(lhs) && !used(rhs)) {
+              // reserve the merged surface too: a later same-round pick
+              // naming it (e.g. (ab, c) after (a, b)) would carry a
+              // count the earlier merge just changed
+              used += lhs; used += rhs; used += lhs + rhs
+              merges += ((rank, lhs, rhs, top(i).getLong(1)))
+              cur = cur.withColumn("seg",
+                replace(col("seg"), lit(s" $lhs  $rhs "), lit(s" $lhs$rhs ")))
+              rank += 1
+              picked += 1
+            }
+            i += 1
           }
-          i += 1
-        }
-        // bound the lineage: hundreds of stacked replace projections
-        // make analysis itself the bottleneck, so every ~64 merges the
-        // segmentation re-materializes (localCheckpoint truncates the
-        // plan; the relation stays word-table-sized)
-        sinceCheckpoint += picked
-        if (sinceCheckpoint >= 64) {
-          cur = cur.localCheckpoint(true)
-          sinceCheckpoint = 0
+          // bound the lineage: hundreds of stacked replace projections
+          // make analysis itself the bottleneck, so every ~64 merges the
+          // segmentation re-materializes (localCheckpoint truncates the
+          // plan; the relation stays word-table-sized)
+          sinceCheckpoint += picked
+          if (sinceCheckpoint >= 64) {
+            cur = cur.localCheckpoint(true)
+            sinceCheckpoint = 0
+          }
         }
       }
-    }
-    words.unpersist()
-    (merges.result(), rounds)
+      (merges.result(), rounds)
+    } finally words.unpersist()
   }
 
   /** Corpus token mass under a merge list: Σ over the word table of
@@ -1071,31 +1057,15 @@ object TextAnalysis {
       .agg(sum(col("m"))).head.getLong(0)
   }
 
-  /** Trained-merge memo for [[bpeTrainBatched]], the batched twin of
-    * [[bpeTrained]]'s per-corpus model cache: one batched training per
-    * (corpus, rounds, M) per JVM — the first call pays the full census
-    * loop from the parquet input, repeat calls (the bench's warm
-    * passes, the facade) rebuild the bounded merge table from the
-    * memoized rule list. [[bpeLearnBatchedCounted]] itself stays
-    * uncached so [[graft.BpeScale]] measures real training walls.
-    */
-  private val bpeBatchedCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), Seq[(Int, String, String, Long)]]()
-
   /** [[bpeTrain]]'s merge-table shape from the batched trainer —
     * (merge_rank, lhs, rhs, pair_count at the selecting census).
+    * Trains on every call: no memo, like [[graft.BpeScale]].
     */
   def bpeTrainBatched(spark: SparkSession, dir: String,
                       totalMerges: Int = BpeMerges,
                       batchM: Int = 1): DataFrame = {
     import spark.implicits._
-    val key = (corpusFingerprint(spark, dir), totalMerges, batchM)
-    // bound (r11): rule lists are driver memory — keep only the
-    // current corpus's settings, evict on corpus change
-    if (!bpeBatchedCache.containsKey(key))
-      bpeBatchedCache.keySet.removeIf(_._1 != key._1)
-    bpeBatchedCache.computeIfAbsent(
-        key, _ => bpeLearnBatched(spark, dir, totalMerges, batchM))
+    bpeLearnBatched(spark, dir, totalMerges, batchM)
       .toDF("merge_rank", "lhs", "rhs", "pair_count")
       .orderBy(col("merge_rank"))
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import graft.functions.VectorFunctions._
 import graft.plans.ScoreTag
 import graft.functions.TextFunctions.hash60Sql
@@ -474,15 +474,14 @@ object VectorSearch {
     // side, bucket census) and signing is the expensive 16-plane
     // kernel pass — without the persist the plan signs the corpus
     // once PER consumer (audited: four full Scan+HyperplaneSig
-    // chains). Spillable storage level; entry lifecycle rides the
-    // session cache LRU like tfidfKeywords' shared subtree (at real
-    // scale the signed relation is the persisted LSH layout
-    // VectorIndex already materializes once per corpus, not a
-    // per-query cache).
-    val corpus = vecs
-      .withColumn("bucket", lshBucket(col("emb"), all.take(AnnLshPlanes)))
-      .withColumn("salt", lshBucket(col("emb"), all.drop(AnnLshPlanes)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // chains). One slot keyed by the input plan (at real scale the
+    // signed relation is the persisted LSH layout VectorIndex already
+    // materializes once per corpus, not a per-query cache).
+    val corpus = OpCache.cached("vector.knnGraph.signed", vecs.sparkSession, OpCache.plan(vecs)) {
+      vecs
+        .withColumn("bucket", lshBucket(col("emb"), all.take(AnnLshPlanes)))
+        .withColumn("salt", lshBucket(col("emb"), all.drop(AnnLshPlanes)))
+    }
     val sizes = corpus.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
     val keyed = corpus.join(broadcast(sizes), Seq("bucket"))
       .withColumn("skey", when(col("bn") > cap, col("salt")).otherwise(lit(0L)))
@@ -535,11 +534,15 @@ object VectorSearch {
     val all = lshPlanes(64, AnnLshPlanes + KnnSaltPlanes)
     val masks = lshProbeMasks(AnnLshPlanes, radius)
     // two consumers of the signed candidate side (census + keyed) —
-    // persist, mirroring annKnnGraphFromVecs' audited plan
-    val corpus = cands
-      .withColumn("bucket", lshBucket(col("emb"), all.take(AnnLshPlanes)))
-      .withColumn("salt", lshBucket(col("emb"), all.drop(AnnLshPlanes)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cached, mirroring annKnnGraphFromVecs' audited plan. Keyed by the
+    // candidate plan: a stream's next micro-batch rebinds the slot, so
+    // at most one signed (layout ∪ batch) relation stays resident
+    val corpus = OpCache.cached("vector.knnForProbes.signed", cands.sparkSession,
+        OpCache.plan(cands)) {
+      cands
+        .withColumn("bucket", lshBucket(col("emb"), all.take(AnnLshPlanes)))
+        .withColumn("salt", lshBucket(col("emb"), all.drop(AnnLshPlanes)))
+    }
     val sizes = corpus.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
     val keyed = corpus.join(broadcast(sizes), Seq("bucket"))
       .withColumn("skey", when(col("bn") > cap, col("salt")).otherwise(lit(0L)))
@@ -826,14 +829,11 @@ object VectorSearch {
     math.min(PqCoarseMax.toLong,
       math.max(PqCoarseK.toLong, math.ceil(MsCoarseFrac * n).toLong)).toInt
 
-  // one count job per table directory per JVM, not per query — the
-  // bench drives many PQ entries over the same corpus
-  private val corpusCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
+  // one count job per corpus, not per query — the bench drives many
+  // PQ entries over the same corpus
   private[graft] def corpusCount(spark: SparkSession, dir: String): Long =
-    corpusCountCache.computeIfAbsent(dir,
-      _ => Long.box(Tables.embeddings(spark, dir).count())).longValue
+    OpCache.memo("vector.corpusCount", spark, dir)(
+      Long.box(Tables.embeddings(spark, dir).count())).longValue
 
   private[graft] def resolveCoarseK(spark: SparkSession, dir: String,
                                     coarseK: Int): Int =

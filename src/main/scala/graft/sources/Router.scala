@@ -7,9 +7,9 @@ package graft.sources
   * Spark owns balancing for BATCH queries — task scheduling, shuffle
   * partitioning, speculative execution ARE the cluster's load
   * balancer, and re-wrapping them would shadow the real machinery.
-  * The in-JVM [[PointServe]] path answers with zero Spark jobs, so —
-  * exactly like the [[Resilience]] guards — it takes the reference's
-  * own routing logic for replicated serving handles:
+  * The in-JVM [[PointServe]] path answers with zero Spark jobs, so it
+  * takes the reference's own routing logic for replicated serving
+  * handles:
   *
   *  - round-robin (load_balancer.rs:357), skipping unhealthy nodes
   *  - weighted round-robin (:370) — as SMOOTH weighted round-robin

@@ -347,18 +347,114 @@ class DedupSpec extends GraftSuite {
   test("operator cache is bounded: a new corpus evicts the previous pair relation (r11)") {
     // OpCache holds ONE live persisted relation per slot — visiting a
     // second dir must unpersist the first dir's relation instead of
-    // stranding it for the session's lifetime (advisor r10 ask)
+    // stranding it for the session's lifetime. One slot per operator
+    // file that registers one; each build call returns or derives from
+    // the slot's relation
+    import graft.operators._
+    import org.apache.spark.sql.{DataFrame, SparkSession}
     import org.apache.spark.storage.StorageLevel
-    val df1 = Dedup.verifiedPairs(spark, sf)
-    assert(df1.storageLevel != StorageLevel.NONE)
-    val df2 = Dedup.verifiedPairs(spark, "/root/testdata/sf0.01")
-    assert(df1.storageLevel == StorageLevel.NONE,
-      "previous corpus's pair relation must be unpersisted on corpus change")
-    assert(df2.storageLevel != StorageLevel.NONE)
-    // switching back rebuilds (and evicts the sf0.01 relation) — the
-    // slot never holds more than one corpus
-    val df3 = Dedup.verifiedPairs(spark, sf)
-    assert(df2.storageLevel == StorageLevel.NONE)
-    assert(df3.storageLevel != StorageLevel.NONE)
+    val sf01 = sf.stripSuffix("sf0.001") + "sf0.01"
+    val slots: Seq[(String, (SparkSession, String) => Any)] = Seq(
+      "analytics.q17.branded"      -> ((s, d) => Analytics.q17(s, d)),
+      "bm25.toks"                  -> ((s, d) => Bm25.search(s, d)),
+      "clustering.outliers.assign" -> ((s, d) => Clustering.embedOutliers(s, d)),
+      "curation.dsir.inst"         -> ((s, d) => Curation.dsirInst(s, d)),
+      "dedup.shingleDocs"          -> ((s, d) => Dedup.shingleDocs(s, d)),
+      "dedup.verifiedPairs"        -> ((s, d) => Dedup.verifiedPairs(s, d)),
+      "hybrid.corpusSketch"        -> ((s, d) => HybridSearch.rrfBatch(s, d)),
+      "text.lm.bc"                 -> ((s, d) => TextAnalysis.lmScore(s, d)),
+      "vector.knnGraph.signed"     -> ((s, d) => VectorSearch.annKnnGraph(s, d)))
+    for ((slot, build) <- slots) {
+      def live(): DataFrame = OpCache.held(slot) match {
+        case Some(df: DataFrame) => df
+        case other => fail(s"$slot holds no relation: $other")
+      }
+      build(spark, sf)
+      val a = live()
+      assert(a.storageLevel != StorageLevel.NONE, slot)
+      // same key: the registered relation comes back, nothing is
+      // rebuilt or persisted a second time
+      build(spark, sf)
+      assert(live() eq a, s"$slot rebuilt on a same-key call")
+      build(spark, sf01)
+      val b = live()
+      assert(a.storageLevel == StorageLevel.NONE,
+        s"$slot: previous corpus's relation must be unpersisted on corpus change")
+      assert(b.storageLevel != StorageLevel.NONE, slot)
+      // switching back rebuilds (and evicts the sf0.01 relation) — the
+      // slot never holds more than one corpus
+      build(spark, sf)
+      val c = live()
+      assert(b.storageLevel == StorageLevel.NONE, slot)
+      assert(c.storageLevel != StorageLevel.NONE && !(c eq a), slot)
+    }
+  }
+
+  test("operator cache keys on every parameter: a new hybrid query list rebuilds the sketch") {
+    import graft.operators.HybridSearch
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel
+    val q1 = Seq("spark vector join stream window", "table scan filter merge sort")
+    val q2 = Seq("hash group key column batch", "customer order data query line")
+    def sketch() = OpCache.held("hybrid.corpusSketch").get.asInstanceOf[DataFrame]
+    HybridSearch.rrfBatch(spark, sf, q1).collect()
+    val first = sketch()
+    val got = HybridSearch.rrfBatch(spark, sf, q2).collect().toSeq
+    assert(!(sketch() eq first), "a new query list must not reuse the first sketch")
+    assert(first.storageLevel == StorageLevel.NONE)
+    OpCache.clear()
+    assert(got == HybridSearch.rrfBatch(spark, sf, q2).collect().toSeq,
+      "second query list served rows from a stale sketch")
+  }
+
+  test("operator cache: a kNN-graph stream leaves at most one probe relation cached") {
+    import graft.sources.VectorIndex
+    import graft.streaming.EventStreams
+    import org.apache.spark.sql.functions.col
+    val idxPath = java.nio.file.Files.createTempDirectory("gidx_opcache").toString + "/graph"
+    VectorIndex.buildKnnGraphIndex(spark, sf, idxPath)
+    val maxId = Tables.embeddings(spark, sf).agg(org.apache.spark.sql.functions.max(col("vec_id")))
+      .head.getLong(0)
+    // three staged files, one per micro-batch: each batch is a clone
+    // of one resident vector under a fresh id
+    val stageDir = java.nio.file.Files.createTempDirectory("gvecs_opcache").toString
+    (0 until 3).foreach { i =>
+      Tables.embeddings(spark, sf).filter(col("vec_id") === i)
+        .select((col("vec_id") + maxId + 1).as("vec_id"), col("embedding"))
+        .write.mode("append").parquet(stageDir)
+    }
+    val schema = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding")).schema
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val q = EventStreams.knnGraphIndexStream(
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(stageDir),
+      idxPath)
+    q.processAllAvailable(); q.stop()
+    assert(spark.read.parquet(idxPath).filter(col("gen") > 0)
+      .select(col("gen")).distinct().count() == 3, "expected three micro-batches")
+    // every earlier batch's relation was unpersisted when the next
+    // batch rebound the slot, so releasing the slot empties the cache
+    OpCache.clear()
+    assert(cacheManager.isEmpty, "earlier micro-batches left cached relations behind")
+  }
+
+  test("nested operator-cache slots build concurrently without a recursive update") {
+    // verifiedPairs builds INSIDE its slot over the shingleDocs slot;
+    // two threads entering both at once must each get the one
+    // registered relation, not an IllegalStateException or a duplicate
+    import java.util.concurrent.{Executors, TimeUnit}
+    OpCache.clear()
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val futures = Seq(
+        pool.submit(() => { Dedup.shingleDocs(spark, sf); Dedup.verifiedPairs(spark, sf) }),
+        pool.submit(() => Dedup.verifiedPairs(spark, sf)))
+      val dfs = futures.map(_.get(120, TimeUnit.SECONDS))
+      assert(dfs(0) eq dfs(1), "two threads built two verifiedPairs relations")
+      val rows = dfs(0).collect().toSet
+      OpCache.clear()
+      assert(rows == Dedup.verifiedPairs(spark, sf).collect().toSet)
+    } finally pool.shutdown()
   }
 }

@@ -79,15 +79,6 @@ class TextAnalysisSpec extends GraftSuite {
     assert(st.map(_.getAs[Long]("n_docs")).sum == 500)
   }
 
-  test("multimodal decode batch matches column-path metadata") {
-    val assets = Multimodal.assets(spark, sf)
-    val decoded = Multimodal.decodeBatch(spark, assets).collect()
-    assert(decoded.length == 500)
-    val viaCols = Multimodal.meta(spark, sf).collect()
-      .map(r => (r.getAs[Long]("asset_id"), r.getAs[Long]("width"))).toMap
-    assert(decoded.forall(d => viaCols(d.asset_id) == d.width))
-  }
-
   test("byte features sum to the payload byte total and resize fits the box") {
     import org.apache.spark.sql.functions._
     val f = Multimodal.features(spark, sf).collect()
